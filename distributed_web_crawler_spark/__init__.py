@@ -13,8 +13,10 @@ Kafka + Cassandra + S3) as an idiomatic PySpark engine:
   core/WebCrawler.java:33-34) become explicit ``hosts`` state and
   window-function fetch budgets;
 - content dedup via Cassandra secondary index (reference: schema.cql:17,
-  core/WebCrawler.java:333-336) becomes a left-anti join with a sharded
-  bloom-filter pre-probe.
+  core/WebCrawler.java:333-336) becomes a plain left-anti join against
+  the stored-hash history;
+- URL-seen dedup (absent in the reference) is a left-anti join fronted by
+  one sharded bloom filter — the engine's only seen-state filter.
 
 Nothing here is a port: all hot paths are DataFrame transformations and
 Arrow-vectorized pandas UDFs.

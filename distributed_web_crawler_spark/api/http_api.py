@@ -218,6 +218,10 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
             if path == "/api/data/pages":
                 limit = self._int(qs, "limit", 50)
                 offset = self._int(qs, "offset", 0)
+                if limit < 0 or offset < 0:
+                    self._json(400, {"status": "error", "message":
+                                     "limit and offset must be >= 0"})
+                    return
                 pages = self.server.reader.pages(limit, offset)
                 self._json(200, {"status": "success", "pages": pages,
                                  "count": len(pages), "limit": limit,
@@ -230,6 +234,10 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
                                      "Search query cannot be empty"})
                     return
                 limit = self._int(qs, "limit", 50)
+                if limit < 0:
+                    self._json(400, {"status": "error",
+                                     "message": "limit must be >= 0"})
+                    return
                 pages = self.server.reader.search(query, limit)
                 self._json(200, {"status": "success", "query": query,
                                  "pages": pages, "count": len(pages),

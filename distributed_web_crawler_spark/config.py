@@ -4,8 +4,9 @@ Mirrors the reference's ``CrawlerProperties`` (reference:
 config/CrawlerProperties.java:10-42 and application.yml:36-54): max depth,
 retry ceiling, allow/exclude URL regexes, politeness delay. Adds the knobs
 the Spark engine needs that the reference keeps implicit: per-round per-host
-fetch budget (the batch analog of ``crawl-delay``), URL-seen bloom shard
-count, and skew-salting thresholds (BASELINE.json north_rule).
+fetch budget (the batch analog of ``crawl-delay``), the URL-seen bloom's
+shard count and size (the engine's one seen-state filter; content dedup is
+a plain anti-join), and skew-salting thresholds (BASELINE.json north_rule).
 
 Everything is a frozen dataclass so it pickles cheaply into Arrow UDF
 closures (no driver-side globals captured by reference).
@@ -37,11 +38,10 @@ class CrawlConfig:
 
     # --- engine knobs (no reference analog; north_rule requirements) ------
     max_rounds: int = 10
-    # URL-seen filter sharding: pmod(xxhash64(url), n_shards)
+    # URL-seen bloom sharding: pmod(xxhash64(url), n_shards); each shard
+    # is an m-bit filter probed with functions.bloom.NUM_HASHES positions
     url_seen_shards: int = 8
     bloom_bits_per_shard: int = 1 << 20
-    bloom_num_hashes: int = 5
-    use_bloom: bool = True
     # skew salting: a host's selected rows split into
     # ceil(n_selected / fetch_rows_per_salt) salted sub-partitions, so no
     # fetch task is dominated by one hot host
@@ -57,16 +57,9 @@ class CrawlConfig:
     # snapshot table, so steady-state rounds read O(1)+tail directories
     # instead of unioning the full round history (0 ⇒ never compact).
     # This is the parquet analog of an Iceberg bucket-transform table
-    # maintenance pass; buckets = pmod(xxhash64(key), seen_state_buckets).
+    # maintenance pass; buckets = pmod(xxhash64(key), SEEN_STATE_BUCKETS)
+    # (crawl/driver.py).
     compact_every_rounds: int = 8
-    seen_state_buckets: int = 32
-    # URL-seen filter backend: "bloom" (default; OR-mergeable, smallest
-    # bytes) or "cuckoo" (functions/cuckoo.py; supports DELETE so recrawl
-    # maintenance can evict retired URLs without a rebuild). The backend
-    # is a per-store commitment — filter bytes persist across rounds, so
-    # never flip it on an existing store.
-    url_seen_backend: str = "bloom"
-    cuckoo_buckets_per_shard: int = 1 << 15
     # AIMD politeness feedback: hosts whose previous round had a >10%
     # fetch-failure rate get max(1, host_budget_per_round // 2) this
     # round (tightening only — composes with Crawl-delay by minimum);

@@ -16,9 +16,11 @@ Commit protocol (tables/snapshot_store.py):
 State read by round r (all committed):
   seen_urls   = distinct url over frontier rounds 0..r   (D4 ground truth:
                 a URL is "seen" once it has ever been enqueued)
-  seen_hashes = pages.content_hash over rounds 0..r-1    (D1)
+  seen_hashes = stored.content_hash over rounds 0..r-1   (D1: a plain
+                left-anti join — no filter in front)
   robots      = robots rounds 0..r-1                     (F6 cache)
-  blooms      = bloom/round=r (full merged state)
+  blooms      = bloom/round=r (full merged state)        (D4: the one
+                seen-state filter, fronting the seen_urls anti-join)
 
 Every ``compact_every_rounds`` rounds the three histories are rewritten as
 single hash-bucketed snapshot tables (url_seen / hash_seen /
@@ -34,6 +36,7 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +48,9 @@ from ..operators.dedup import build_bloom_shards, filter_unseen_urls
 from ..operators.extract import make_synth_fetcher, write_empty_payload
 from ..tables.snapshot_store import SnapshotStore
 from .round import FRONTIER_COLS, RoundState, build_fetch, finish_round
+
+# hash buckets of the compacted url_seen / hash_seen snapshots
+SEEN_STATE_BUCKETS = 32
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -267,7 +273,13 @@ def _take_pending_urls(root: str) -> tuple[list[str], list[str]]:
         taken.append(tgt)
     urls: list[str] = []
     for path in taken:
-        with open(path) as fh:
+        try:
+            fh = open(path)
+        except FileNotFoundError:
+            # another live process consumed this claim between our
+            # listing and the read; its inject already staged the batch
+            continue
+        with fh:
             for line in fh:
                 line = line.strip()
                 if not line:
@@ -535,7 +547,6 @@ class Crawler:
             else seen_hashes.select("content_hash"),
             seen_urls=seen_urls.select("url"),
             blooms=self.store.read(self.spark, "bloom", [r]),
-            hash_blooms=self.store.read(self.spark, "hash_bloom", [r]),
             # feeds_compact@c covers feeds rounds 0..c-1 → tail = c..r-1
             feeds=hist("feeds_compact", ["feed_url", "fetched_round"],
                        "feeds", lambda c: c, r),
@@ -558,7 +569,7 @@ class Crawler:
         Builds on the frames _state_for already assembled for this round
         (compact ∪ tail), extended by this round's staged writes."""
         nxt = r + 1
-        P = self.cfg.seen_state_buckets
+        P = SEEN_STATE_BUCKETS
 
         def bucketed(df, key):
             return (df.distinct()
@@ -617,20 +628,6 @@ class Crawler:
             if ff is not None:
                 ff.result()
 
-    def _hash_bloom_next(self, res, state: RoundState) -> DataFrame:
-        """hash_bloom @ r+1 = hash_bloom @ r extended by round r's stored
-        hashes. If no committed hash_bloom exists but prior stored rounds
-        do (a store created before hash blooms existed, resumed now), the
-        filter must be seeded from the FULL stored history — a delta-only
-        bloom would test old hashes negative and re-store duplicates.
-        Reuses the frames _state_for already loaded for this round."""
-        delta = res.stored.select("content_hash")
-        if state.hash_blooms is None and state.seen_hashes is not None:
-            delta = delta.unionByName(state.seen_hashes)
-        return build_bloom_shards(delta, self.cfg,
-                                  existing=state.hash_blooms,
-                                  key="content_hash")
-
     def _adaptive_overrides(self, r: int):
         """AIMD politeness feedback (cfg.adaptive_budget): hosts whose
         PREVIOUS round had a >10% fetch-failure rate get their budget
@@ -688,8 +685,10 @@ class Crawler:
                 pend_urls, claimed = _take_pending_urls(root)
                 if pend_urls:
                     self.inject(pend_urls)
+                # a second live process may have consumed and dropped
+                # the same claim already: a vanished file is done work
                 for path in claimed:
-                    os.remove(path)
+                    Path(path).unlink(missing_ok=True)
             frontier = self.store.read(self.spark, "frontier", [r])
             if frontier is None:
                 if not self.store.exists("inject", r):
@@ -739,8 +738,7 @@ class Crawler:
                         robots=state.robots,
                         seen_hashes=state.seen_hashes,
                         seen_urls=seen_plus,
-                        blooms=blooms_plus,
-                        hash_blooms=state.hash_blooms)
+                        blooms=blooms_plus)
             # phase A: fetch → pages shards in ONE pass, written by the
             # Arrow workers themselves — payload bytes never cross the
             # Python→JVM boundary, never shuffle, never hit the cache. The
@@ -800,11 +798,6 @@ class Crawler:
                                .stage_write("bloom", build_bloom_shards(
                                    res.new_urls.select("url"), self.cfg,
                                    existing=state.blooms), r + 1))
-                # content-hash bloom (D1 front): delta = this round's stored
-                f4 = ex.submit(_timed, "hash_bloom", lambda: self.store
-                               .stage_write("hash_bloom",
-                                            self._hash_bloom_next(res, state),
-                                            r + 1))
                 # lineage is tiny (≤ shards × metrics rows): one collect
                 # feeds both the lineage table and the round counts
                 f3 = ex.submit(_timed, "lineage",
@@ -829,7 +822,7 @@ class Crawler:
                         "feed_entries", res.feed_entries
                         .withColumn("fetched_round", F.lit(r)), r)))
                       if res.feeds_new is not None else None)
-                f1.result(), f2.result(), f4.result()
+                f1.result(), f2.result()
                 if f5 is not None:
                     f5.result()
                 if f6 is not None:
@@ -894,7 +887,10 @@ class Crawler:
         With committed head h and latest compaction generation c:
         - older compaction generations of url_seen / hash_seen /
           robots_compact (resume reads only the latest ≤ h);
-        - bloom / hash_bloom dirs at rounds < h (resume reads @h only);
+        - bloom dirs at rounds < h (resume reads @h only);
+        - every hash_bloom dir — the content-hash filter that once
+          fronted D1; no reader is left, so stores written with it
+          carry it as dead weight;
         - frontier dirs ≤ min(c, h-1) (url_seen@c absorbs rounds 0..c;
           round h is the live frontier) — at 10^10 scale these carry
           full frontier snapshots and dominate derived-state bytes;
@@ -923,9 +919,7 @@ class Crawler:
         c = self._latest_compact("url_seen", h)
         drop("bloom", [r for r in self.store.rounds_present("bloom")
                        if r < h])
-        drop("hash_bloom",
-             [r for r in self.store.rounds_present("hash_bloom")
-              if r < h])
+        drop("hash_bloom", self.store.rounds_present("hash_bloom"))
         if c is not None:
             drop("frontier",
                  [r for r in self.store.rounds_present("frontier")

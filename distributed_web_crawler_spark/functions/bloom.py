@@ -1,7 +1,8 @@
-"""Sharded bloom filter for the URL-seen set (SURVEY.md §2.3 D4).
+"""Sharded bloom filter for the URL-seen set (SURVEY.md §2.3 D4) — the
+engine's one seen-state filter.
 
 The reference has *no* URL-seen dedup (README claims it, code lacks it —
-SURVEY.md D4); BASELINE.json north_rule mandates a partitioned bloom/cuckoo
+SURVEY.md D4); BASELINE.json north_rule mandates a partitioned URL-seen
 filter. Design for 10^10 URLs:
 
 - shard by ``pmod(xxhash64(url), n_shards)`` — filters stay bounded per
@@ -10,7 +11,7 @@ filter. Design for 10^10 URLs:
   stage codegen), so the Python side is pure numpy bit math over Arrow
   batches — no per-row Python, per BASELINE.json's hot-path constraint;
 - double hashing: position_i = (h1 + i*h2) mod m  (Kirsch–Mitzenmacher),
-  k positions per key;
+  k = NUM_HASHES positions per key;
 - a bloom positive is only a *candidate*: the engine re-checks positives
   with an exact left-anti join against the seen table, so false positives
   never change results (SURVEY.md §7.2 hard part (b)). Negatives skip the
@@ -24,6 +25,8 @@ Sizing: at 10^10 keys / 4096 shards ≈ 2.4M keys/shard; m = 2^25 bits/shard
 from __future__ import annotations
 
 import numpy as np
+
+NUM_HASHES = 5
 
 
 def empty_filter(m_bits: int) -> bytes:
@@ -39,7 +42,7 @@ def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int, k: int) -> np.ndarra
 
 
 def insert(filter_bytes: bytes, h1: np.ndarray, h2: np.ndarray,
-           m_bits: int, k: int) -> bytes:
+           m_bits: int, k: int = NUM_HASHES) -> bytes:
     bits = np.unpackbits(np.frombuffer(filter_bytes, dtype=np.uint8))
     pos = _positions(h1, h2, m_bits, k)
     bits[pos.ravel()] = 1
@@ -47,14 +50,10 @@ def insert(filter_bytes: bytes, h1: np.ndarray, h2: np.ndarray,
 
 
 def probe(filter_bytes: bytes, h1: np.ndarray, h2: np.ndarray,
-          m_bits: int, k: int) -> np.ndarray:
+          m_bits: int, k: int = NUM_HASHES) -> np.ndarray:
     """Boolean array: True = maybe-seen (needs exact re-check),
     False = definitely new (no false negatives)."""
     bits = np.unpackbits(np.frombuffer(filter_bytes, dtype=np.uint8))
     pos = _positions(h1, h2, m_bits, k)
     return bits[pos].all(axis=0)
 
-
-def merge(a: bytes, b: bytes) -> bytes:
-    return (np.frombuffer(a, dtype=np.uint8) |
-            np.frombuffer(b, dtype=np.uint8)).tobytes()

@@ -12,10 +12,10 @@ reference's MessageDigest loop (core/WebCrawler.java:442-456).
 
 D4 URL-seen (north_rule; absent in reference): exact left-anti join against
 the seen-URL table, fronted by the sharded bloom filter of
-``functions.bloom`` so that at scale only bloom-positive candidates (≈FP
-rate of genuinely-new URLs, <1%) enter the join. Bloom negatives are
-definitely new; positives are re-checked exactly, so the result equals the
-plain anti-join bit-for-bit.
+``functions.bloom`` — the engine's one seen-state filter — so that at scale
+only bloom-positive candidates (≈FP rate of genuinely-new URLs, <1%) enter
+the join. Bloom negatives are definitely new; positives are re-checked
+exactly, so the result equals the plain anti-join bit-for-bit.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 
 from ..config import CrawlConfig
 from ..functions import bloom as B
-from ..functions import cuckoo as C
 
 URL_SEEN_FILTER_SCHEMA = T.StructType([
     T.StructField("shard", T.IntegerType()),
@@ -36,64 +35,28 @@ URL_SEEN_FILTER_SCHEMA = T.StructType([
 ])
 
 
-def _seen_backend(cfg: CrawlConfig):
-    """(empty, insert, probe) closures for the configured URL-seen filter
-    backend — bloom (default) or cuckoo (delete-capable). Both share the
-    shard/cogroup plumbing and the positives-re-checked-exactly contract,
-    so the engine result is backend-independent bit-for-bit."""
-    if cfg.url_seen_backend == "cuckoo":
-        nb = cfg.cuckoo_buckets_per_shard
-        return (lambda: C.empty_filter(nb),
-                lambda fb, h1, h2: C.insert(fb, h1, h2, nb),
-                lambda fb, h1, h2: C.probe(fb, h1, h2, nb))
-    m, k = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
-    return (lambda: B.empty_filter(m),
-            lambda fb, h1, h2: B.insert(fb, h1, h2, m, k),
-            lambda fb, h1, h2: B.probe(fb, h1, h2, m, k))
-
-
 def content_hash_col() -> F.Column:
     """D2: sha256(bytes || utf8(caption)) — matches synthweb.content_hash_py
     and the reference's hash of the page body (core/WebCrawler.java:442-456)."""
     return F.sha2(F.concat(F.col("bytes"), F.encode(F.col("caption"), "utf-8")), 256)
 
 
-def dedup_content(fetched: DataFrame, seen_hashes: DataFrame | None,
-                  blooms: DataFrame | None = None,
-                  cfg: CrawlConfig | None = None,
-                  cached: list | None = None) -> DataFrame:
+def dedup_content(fetched: DataFrame,
+                  seen_hashes: DataFrame | None) -> DataFrame:
     """D1. ``fetched`` must carry content_hash/priority/host/url. Returns the
-    rows to store; dropped rows are duplicates.
-
-    With ``blooms`` (sharded content-hash filters over all previously
-    stored rounds): bloom negatives are definitely new and skip the history
-    entirely; only positives are re-checked exactly (see
-    _recheck_positives for the join-strategy rationale). Without blooms
-    (tests / first round): plain anti-join. Results are bit-identical
-    either way."""
+    rows to store; dropped rows are duplicates: the within-round winner per
+    hash, left-anti joined against every previously stored hash."""
     w = Window.partitionBy("content_hash").orderBy("priority", "host", "url")
     first = (fetched.withColumn("_rn", F.row_number().over(w))
              .where(F.col("_rn") == 1).drop("_rn"))
     if seen_hashes is None:
         return first
     seen = seen_hashes.select("content_hash").distinct()
-    if blooms is None or cfg is None or not cfg.use_bloom:
-        return first.join(seen, "content_hash", "left_anti")
-    probed = probe_bloom_shards(first, blooms, cfg, key="content_hash")
-    if cached is not None:
-        probed = probed.persist()
-        cached.append(probed)
-    negatives = (probed.where(~F.col("_maybe_seen"))
-                 .drop("_h1", "_h2", "shard", "_maybe_seen"))
-    positives = (probed.where(F.col("_maybe_seen"))
-                 .drop("_h1", "_h2", "shard", "_maybe_seen"))
-    return negatives.unionByName(
-        _recheck_positives(positives, seen, "content_hash"))
+    return first.join(seen, "content_hash", "left_anti")
 
 
-def _recheck_positives(positives: DataFrame, seen: DataFrame,
-                       key: str) -> DataFrame:
-    """Exact re-check of bloom positives: rows of ``positives`` whose key
+def _recheck_positives(positives: DataFrame, seen: DataFrame) -> DataFrame:
+    """Exact re-check of bloom positives: rows of ``positives`` whose url
     is NOT in ``seen``.
 
     A plain left-anti join, deliberately: a driver-side flip (broadcast
@@ -108,7 +71,7 @@ def _recheck_positives(positives: DataFrame, seen: DataFrame,
     before the shuffle without any driver materialization. On Iceberg the
     bucket-transform storage-partitioned join removes the history shuffle
     entirely; this module keeps the join key exposed for that swap."""
-    return positives.join(seen, key, "left_anti")
+    return positives.join(seen, "url", "left_anti")
 
 
 def with_key_hashes(df: DataFrame, n_shards: int, key: str = "url") -> DataFrame:
@@ -120,24 +83,19 @@ def with_key_hashes(df: DataFrame, n_shards: int, key: str = "url") -> DataFrame
                         .cast("int")))
 
 
-# retained name for round-1 call sites/tests
-with_url_hashes = with_key_hashes
-
-
 def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
-                       existing: DataFrame | None = None,
-                       key: str = "url") -> DataFrame:
-    """Build/extend per-shard filters from a key DataFrame (URLs or content
-    hashes). The groupBy/cogroup parallelizes across shards; each task does
-    pure numpy bit math. Extension is ONE cogroup pass — new keys insert
+                       existing: DataFrame | None = None) -> DataFrame:
+    """Build/extend the per-shard URL-seen filters from a ``url`` frame.
+    The groupBy/cogroup parallelizes across shards; each task does pure
+    numpy bit math. Extension is ONE cogroup pass — new URLs insert
     directly into their shard's existing filter bytes (no separate
-    build-then-merge stage); shards with no new keys pass through."""
-    f_empty, f_insert, _ = _seen_backend(cfg)
-    hashed = with_key_hashes(keys.select(key), cfg.url_seen_shards, key)
+    build-then-merge stage); shards with no new URLs pass through."""
+    m = cfg.bloom_bits_per_shard
+    hashed = with_key_hashes(keys.select("url"), cfg.url_seen_shards)
 
     def build(gkey, pdf: pd.DataFrame) -> pd.DataFrame:
-        filt = f_insert(f_empty(), pdf["_h1"].to_numpy(),
-                        pdf["_h2"].to_numpy())
+        filt = B.insert(B.empty_filter(m), pdf["_h1"].to_numpy(),
+                        pdf["_h2"].to_numpy(), m)
         return pd.DataFrame({"shard": [gkey[0]], "filter_bytes": [filt],
                              "n_items": [len(pdf)]})
 
@@ -151,11 +109,11 @@ def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
             prior = int(filt["n_items"].iloc[0])
             shard = int(filt["shard"].iloc[0])
         else:
-            base, prior = f_empty(), 0
+            base, prior = B.empty_filter(m), 0
             shard = int(cand["shard"].iloc[0])
         if len(cand) > 0:
-            base = f_insert(base, cand["_h1"].to_numpy(),
-                            cand["_h2"].to_numpy())
+            base = B.insert(base, cand["_h1"].to_numpy(),
+                            cand["_h2"].to_numpy(), m)
         return pd.DataFrame({"shard": [shard], "filter_bytes": [base],
                              "n_items": [prior + len(cand)]})
 
@@ -164,46 +122,8 @@ def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
             .applyInPandas(extend, URL_SEEN_FILTER_SCHEMA))
 
 
-def evict_filter_shards(filters: DataFrame, keys: DataFrame,
-                        cfg: CrawlConfig, key: str = "url") -> DataFrame:
-    """Seen-state eviction: remove ``keys`` from their shard's filter —
-    the maintenance pass that lets a recrawl scheduler or mirror collapse
-    retire URLs so they become fetchable again WITHOUT rebuilding the
-    filter table. Cuckoo backend only (bloom bits are shared between
-    keys; deleting would corrupt other keys' membership — callers on the
-    bloom backend rebuild via build_bloom_shards instead). Same one-pass
-    cogroup shape as build/extend: each shard's bytes cross the shuffle
-    once; shards with no evictions pass through untouched. Callers must
-    also delete the rows from the exact seen table (the filter is only
-    the probe front)."""
-    if cfg.url_seen_backend != "cuckoo":
-        raise ValueError("filter eviction requires url_seen_backend="
-                         "'cuckoo'; bloom filters cannot delete — "
-                         "rebuild with build_bloom_shards instead")
-    nb = cfg.cuckoo_buckets_per_shard
-    hashed = with_key_hashes(keys.select(key), cfg.url_seen_shards, key)
-
-    def evict(cand: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        if len(filt) == 0:
-            return pd.DataFrame({"shard": [], "filter_bytes": [],
-                                 "n_items": []}).astype(
-                {"shard": "int32", "n_items": "int64"})
-        base = bytes(filt["filter_bytes"].iloc[0])
-        shard = int(filt["shard"].iloc[0])
-        prior = int(filt["n_items"].iloc[0])
-        if len(cand) > 0:
-            base = C.delete(base, cand["_h1"].to_numpy(),
-                            cand["_h2"].to_numpy(), nb)
-        return pd.DataFrame({"shard": [shard], "filter_bytes": [base],
-                             "n_items": [max(0, prior - len(cand))]})
-
-    return (hashed.groupBy("shard")
-            .cogroup(filters.groupBy("shard"))
-            .applyInPandas(evict, URL_SEEN_FILTER_SCHEMA))
-
-
 def probe_bloom_shards(candidates: DataFrame, blooms: DataFrame,
-                       cfg: CrawlConfig, key: str = "url") -> DataFrame:
+                       cfg: CrawlConfig) -> DataFrame:
     """Tag each candidate row with ``_maybe_seen`` from its shard's filter.
 
     Cogroup candidates with their shard's filter: one shuffle on `shard`
@@ -211,8 +131,8 @@ def probe_bloom_shards(candidates: DataFrame, blooms: DataFrame,
     replicated per row (an equi-join would materialize |candidates| ×
     filter_size), never through the driver, so 4096 × 4 MiB of filter
     state stays distributed at 10^10 scale."""
-    _, _, f_probe = _seen_backend(cfg)
-    hashed = with_key_hashes(candidates, cfg.url_seen_shards, key)
+    m = cfg.bloom_bits_per_shard
+    hashed = with_key_hashes(candidates, cfg.url_seen_shards)
     probe_schema = T.StructType(
         hashed.schema.fields + [T.StructField("_maybe_seen", T.BooleanType())])
 
@@ -221,9 +141,9 @@ def probe_bloom_shards(candidates: DataFrame, blooms: DataFrame,
         if len(filt) == 0:
             out["_maybe_seen"] = False
         else:
-            out["_maybe_seen"] = f_probe(
+            out["_maybe_seen"] = B.probe(
                 bytes(filt["filter_bytes"].iloc[0]),
-                cand["_h1"].to_numpy(), cand["_h2"].to_numpy())
+                cand["_h1"].to_numpy(), cand["_h2"].to_numpy(), m)
         return out
 
     return (hashed.groupBy("shard")
@@ -242,10 +162,10 @@ def filter_unseen_urls(candidates: DataFrame, seen_urls: DataFrame | None,
     if seen_urls is None:
         return candidates
     seen = seen_urls.select("url").distinct()
-    if blooms is None or not cfg.use_bloom:
+    if blooms is None:
         return candidates.join(seen, "url", "left_anti")
 
-    probed = probe_bloom_shards(candidates, blooms, cfg, key="url")
+    probed = probe_bloom_shards(candidates, blooms, cfg)
     if cached is not None:
         # persist: both branches below consume `probed`; without it the
         # whole cogroup + Arrow probe pipeline executes twice. Only cache
@@ -257,4 +177,4 @@ def filter_unseen_urls(candidates: DataFrame, seen_urls: DataFrame | None,
                  .drop("_h1", "_h2", "shard", "_maybe_seen"))
     positives = (probed.where(F.col("_maybe_seen"))
                  .drop("_h1", "_h2", "shard", "_maybe_seen"))
-    return negatives.unionByName(_recheck_positives(positives, seen, "url"))
+    return negatives.unionByName(_recheck_positives(positives, seen))

@@ -20,6 +20,7 @@ an existing Kafka frontier needs a bridge both ways:
 - ``frontier_from_json(values, round_no)`` → FRONTIER_SCHEMA rows ready
   for ``Crawler.inject`` / a bootstrap frontier write: parses the
   CrawlRequest JSON (tolerating absent OR explicit-null optionals),
+  drops records without a url (blank lines, malformed JSON, ``{}``),
   derives the host partition key from the URL, and stamps the target
   round.
 
@@ -84,7 +85,10 @@ def frontier_from_json(values: DataFrame, round_no: int = 0,
     """CrawlRequest JSON strings → FRONTIER_SCHEMA rows. Absent and
     explicit-null optionals both parse to null; host re-derives from the
     URL (the frontier's partition key never rides the wire — the
-    reference keys the ProducerRecord by URL for the same reason)."""
+    reference keys the ProducerRecord by URL for the same reason).
+    Values that parse to no url — a blank line, malformed JSON, ``{}`` —
+    are dropped: no gate rejects a null url and D4 never matches it, so
+    it would reach the fetch and fail the round on every re-consume."""
     r = F.from_json(F.col(value_col), CRAWL_REQUEST_JSON_SCHEMA)
     host = host_of(r["url"])  # X1, the engine's host extract
 
@@ -106,7 +110,8 @@ def frontier_from_json(values: DataFrame, round_no: int = 0,
         r["priority"].alias("priority"),
         r["retryCount"].alias("retry_count"),
         ms(r["scheduledFor"]).alias("scheduled_for_ms"),
-        F.lit(round_no).cast("int").alias("round"))
+        F.lit(round_no).cast("int").alias("round")).where(
+            F.col("url").isNotNull())
 
 
 def wire_inject_stream(crawler, topic_dir: str,
@@ -129,13 +134,15 @@ def wire_inject_stream(crawler, topic_dir: str,
     stream's source offsets, so re-invoking after new files land
     consumes ONLY the new records — the committed-offset semantics of
     the reference's manual ``ack.acknowledge()``. Returns the number of
-    wire records injected by THIS invocation."""
+    wire records injected by THIS invocation (records without a url are
+    skipped, see ``frontier_from_json``)."""
     spark = crawler.spark
     injected = {"n": 0}
 
     def one_batch(df, _epoch_id) -> None:
-        injected["n"] += df.count()
-        crawler.inject_frontier(frontier_from_json(df))
+        rows = frontier_from_json(df)
+        injected["n"] += rows.count()
+        crawler.inject_frontier(rows)
 
     q = (spark.readStream.text(topic_dir)
          .writeStream

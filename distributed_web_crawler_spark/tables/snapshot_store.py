@@ -164,7 +164,7 @@ class SnapshotStore:
             # allowMissingColumns: a store committed by pre-date-partition
             # code has flat round dirs (no fetch_date= layer); resuming it
             # must not fail the union — missing partition columns read as
-            # null, mirroring the pre-hash-bloom migration support.
+            # null.
             dfs = [spark.read.option("basePath", p).parquet(p)
                    for p in paths]
             out = dfs[0]

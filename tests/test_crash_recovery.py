@@ -66,8 +66,9 @@ def test_expire_state_preserves_crawl_and_shrinks_dirs(spark, tmp_path):
     """Crawler.expire_state deletes only absorbed/superseded state:
     after expiry mid-crawl, a fresh driver resumes and finishes with
     golden-identical visits, and the deleted directories are the
-    compaction-absorbed frontier/robots rounds, old filter generations
-    and superseded compact snapshots."""
+    compaction-absorbed frontier/robots rounds, old filter generations,
+    superseded compact snapshots and leftover content-hash filter dirs
+    (``hash_bloom``, which no reader consults any more)."""
     from distributed_web_crawler_spark.golden import golden_crawl
 
     synth = SynthWebConfig(n_hosts=10, base_pages_per_host=24)
@@ -80,10 +81,19 @@ def test_expire_state_preserves_crawl_and_shrinks_dirs(spark, tmp_path):
     c.bootstrap(seeds)
     c.run(max_rounds=5)
 
+    # a leftover content-hash filter generation, as older stores hold
+    leftover = os.path.join(c.store.tables_dir, "hash_bloom",
+                            f"round={c.store.last_round()}")
+    os.makedirs(leftover)
+    with open(os.path.join(leftover, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"PAR1")
+
     pre_frontier = set(c.store.rounds_present("frontier"))
     pre_bloom = set(c.store.rounds_present("bloom"))
     counts = c.expire_state()
     assert counts.get("frontier") and counts.get("bloom"), counts
+    assert counts.get("hash_bloom") == 1, counts
+    assert c.store.rounds_present("hash_bloom") == []
     post_frontier = set(c.store.rounds_present("frontier"))
     assert post_frontier < pre_frontier
     assert max(pre_frontier) in post_frontier  # live frontier kept

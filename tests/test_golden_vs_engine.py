@@ -250,22 +250,27 @@ def test_pages_mixed_date_layout_reads(spark, tmp_path):
     assert later and all(r["n_dated"] == r["n"] for r in later)
 
 
-def test_resume_from_pre_hash_bloom_store(spark, tmp_path, golden):
-    """A store created before the hash_bloom table existed must reseed the
-    filter from the FULL stored history on resume — a delta-only bloom
-    would test old hashes negative and re-store duplicates."""
-    import os
-    import shutil
-
-    root = str(tmp_path / "mig_store")
-    c1 = Crawler(spark, CFG, SYNTH, root)
-    c1.bootstrap(SEEDS)
-    c1.run(max_rounds=3)
-    shutil.rmtree(os.path.join(root, "tables", "hash_bloom"))
-
-    c2 = Crawler(spark, CFG, SYNTH, root)
-    c2.run()
-    assert c2.visit_sequence() == golden.visits
+def test_d1_drops_hashes_stored_in_earlier_rounds(crawled):
+    """Power check for cross-round D1: some round >= 1 fetches a page
+    whose content hash an earlier round already stored, and the anti-join
+    against the stored-hash history drops it. Without cross-round dedup
+    those pages would be stored again."""
+    crawler, _ = crawled
+    raw = crawler.store.read(crawler.spark, "pages",
+                             crawler.store.rounds_present("pages"))
+    fetched = (raw.where("fetched").select("round", "url", "content_hash")
+               .collect())
+    first_stored: dict[str, int] = {}
+    stored = set()
+    for row in crawler.stored_slim().collect():
+        h = row["content_hash"]
+        first_stored[h] = min(first_stored.get(h, row["round"]), row["round"])
+        stored.add((row["round"], row["url"]))
+    cross = [(row["round"], row["url"]) for row in fetched
+             if first_stored.get(row["content_hash"], row["round"])
+             < row["round"]]
+    assert cross, "no page re-fetched an earlier round's hash - no power"
+    assert not stored & set(cross)
 
 
 def test_crawl_delay_budget_override(spark, tmp_path):

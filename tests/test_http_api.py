@@ -4,8 +4,10 @@ real sockets against a real store: pagination/search/count parity with
 the engine's own Spark views, live status, graceful stop/start, and the
 anytime-enqueue path consumed by the crawl loop with golden parity."""
 
+import glob
 import http.client
 import json
+import os
 
 import pytest
 
@@ -16,6 +18,8 @@ from distributed_web_crawler_spark.config import (
 )
 from distributed_web_crawler_spark.crawl.driver import (
     Crawler,
+    _control_dir,
+    _take_pending_urls,
     enqueue_urls,
     stop_requested,
 )
@@ -99,6 +103,20 @@ def test_count_search_and_stats(crawled):
     assert out["statistics"]["totals"]["stored"] == n
 
 
+def test_negative_paging_values_rejected(crawled):
+    """A negative limit/offset is a client error (400 with an error
+    body), not a DuckDB failure surfacing as a 500."""
+    _c, _store, _seeds, port = crawled
+    for path in ("/api/data/pages?limit=-1",
+                 "/api/data/pages?offset=-5",
+                 "/api/data/pages?limit=-1&offset=-1",
+                 "/api/data/pages/search?query=h0001&limit=-2"):
+        code, out = _req(port, "GET", path)
+        assert code == 400 and out["status"] == "error", (path, out)
+    code, _ = _req(port, "GET", "/api/data/pages?limit=0&offset=0")
+    assert code == 200
+
+
 def test_status_stop_start_roundtrip(crawled):
     _c, store, _seeds, port = crawled
     code, st = _req(port, "GET", "/api/crawler/status")
@@ -164,9 +182,6 @@ def test_enqueue_urls_file_semantics(tmp_path):
     assert enqueue_urls(store, ["http://a.example.com/"]) == 1
     assert enqueue_urls(store, ["http://b.example.com/",
                                 "http://c.example.com/"]) == 2
-    from distributed_web_crawler_spark.crawl.driver import (
-        _take_pending_urls,
-    )
     urls, taken = _take_pending_urls(store)
     assert urls == ["http://a.example.com/", "http://b.example.com/",
                     "http://c.example.com/"]
@@ -177,3 +192,43 @@ def test_enqueue_urls_file_semantics(tmp_path):
     urls2, taken2 = _take_pending_urls(store)
     assert urls2 == urls + ["http://d.example.com/"]
     assert len(taken2) == 2
+
+
+def test_take_pending_skips_vanished_claim(tmp_path, monkeypatch):
+    """A claim listed but deleted before the read (a second live process
+    consumed it) is skipped, not a FileNotFoundError."""
+    store = str(tmp_path / "s")
+    enqueue_urls(store, ["http://a.example.com/"])
+    listdir = os.listdir
+    monkeypatch.setattr(os, "listdir",
+                        lambda d: listdir(d) + ["consuming-gone"])
+    urls, taken = _take_pending_urls(store)
+    assert urls == ["http://a.example.com/"]
+    assert len(taken) == 2
+
+
+def test_claim_deleted_behind_the_loop_still_commits(
+        spark, tmp_path, monkeypatch):
+    """The round barrier drops its pending-URLs claim after staging the
+    batch; if another process already removed that file, the round
+    still commits."""
+    store = str(tmp_path / "store")
+    c = Crawler(spark, CFG, SYNTH, store)
+    c.bootstrap(seed_urls(SYNTH, 3))
+    c.run(max_rounds=1)
+    enqueue_urls(store, ["http://h0007.example.com/p/3"])
+
+    inject = Crawler.inject
+
+    def inject_then_lose_claim(self, urls):
+        out = inject(self, urls)
+        claims = glob.glob(os.path.join(_control_dir(store), "consuming-*"))
+        assert claims
+        for path in claims:
+            os.remove(path)
+        return out
+
+    monkeypatch.setattr(Crawler, "inject", inject_then_lose_claim)
+    stats = c.run(max_rounds=2)
+    assert stats["rounds"] == 1 and c.store.last_round() == 2
+    assert c.store.exists("inject", 1)
